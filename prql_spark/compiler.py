@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from prql_spark.functions import stdlib
 from prql_spark.parser import PrqlParseError, _line_col, parse
+from prql_spark.plans.barriers import materialize, single_eval
 from prql_spark.plans.nodes import (
     Assign,
     Binary,
@@ -240,12 +241,6 @@ def _has_shuffle_step(pipe: ExprPipeline) -> bool:
     )
 
 
-def _cte_checkpoint_enabled() -> bool:
-    import os
-
-    return os.environ.get("PRQL_SPARK_CTE_CHECKPOINT", "1") != "0"
-
-
 class CExpr:
     """A compiled expression: Spark SQL text + aggregation kind."""
 
@@ -394,28 +389,20 @@ class Compiler:
             # (DataFrame reuse shares the plan, not the work): q21's
             # order_supp ran its lineitem⋈orders aggregate twice —
             # two scans of the largest table, two broadcast builds,
-            # two shuffles. Materialize such a CTE once via the
-            # repo's lazy DISK_ONLY localCheckpoint pattern (same
-            # trade as prepare_training_corpus's scored frame: the
-            # intermediate is not fault-tolerant to executor loss,
-            # so lineage-replay clusters can disable via env).
-            # Gated on the CTE being shuffle-bearing (group/
-            # aggregate/sort/take): a narrow filter-CTE is CHEAPER
-            # re-executed inline, where each consumer keeps its own
-            # column pruning and predicate pushdown.
+            # two shuffles. Materialize such a CTE once (lazily, see
+            # plans.barriers.materialize). Gated on the CTE being
+            # shuffle-bearing (group/aggregate/sort/take): a narrow
+            # filter-CTE is CHEAPER re-executed inline, where each
+            # consumer keeps its own column pruning and predicate
+            # pushdown.
             if (
                 isinstance(df, DataFrame)  # the SQL backend compiles
                 # through here with _SqlRel stand-ins: CTE text needs
                 # no materialization (the dialect emits WITH)
                 and refs.get(t.name, 0) >= 2
                 and _has_shuffle_step(t.pipeline)
-                and _cte_checkpoint_enabled()
             ):
-                from pyspark.storagelevel import StorageLevel
-
-                df = df.localCheckpoint(
-                    eager=False, storageLevel=StorageLevel.DISK_ONLY
-                )
+                df = materialize(df)
             self.local_tables[t.name] = df
         return self.compile_pipeline(q.pipeline)
 
@@ -650,18 +637,10 @@ class Compiler:
         defining expression into the pushed Filter, leaving it in
         BOTH the Filter and the Project that outputs the column —
         every surviving row pays the scoring chain twice (the
-        docs_clean_pipeline double-eval; §4.4's duplication, JVM
-        edition). Wrapping the CONDITION in a nondeterministic no-op
-        does not help: a Filter — even a nondeterministic one — may
-        be pushed through a 1-1 deterministic Project (same rows
-        either way), and the alias substitution still fires. What
-        stops the push is `fields.forall(_.deterministic)` on the
-        PROJECT — so the referenced heavy columns themselves are
-        re-projected through a value-identity NONDETERMINISTIC no-op
-        (see :meth:`_filter_barrier`). CollapseProject inlines the
-        scoring expression into the wrapper (used once), producing
-        ONE Project that computes the chain once; the filter then
-        tests the projected column. Values are identical
+        docs_clean_pipeline double-eval). The referenced heavy
+        columns are re-projected through :meth:`_filter_barrier`'s
+        value-identity no-op, so the chain evaluates once and the
+        filter tests the projected column. Values are identical
         row-for-row; only evaluation placement changes. Heavy
         columns NOT referenced by any later filter are never
         wrapped, and pipelines that never filter on scored columns
@@ -717,25 +696,11 @@ class Compiler:
 
     def _filter_barrier(self, sql: str) -> str:
         """Dialect seam: the Spark engine wraps with the
-        nondeterministic no-op; SQL-text backends (the DuckDB oracle)
-        emit the plain expression — the barrier is a physical-plan
-        concern, not a semantic one.
-
-        ``IF(spark_partition_id() >= 0, c, NULL)``: partition ids
-        are non-negative, so the true branch ALWAYS returns ``c``
-        unchanged for any type, and both If and spark_partition_id
-        are codegen-able — the wrapped scoring chain stays in
-        whole-stage codegen. Two rejected forms, both measured on
-        docs_clean_pipeline: ``shuffle(array(c))[1]`` (the singleton
-        permutation) is CodegenFallback and dragged the entire chain
-        into interpreted eval — costing more than the double
-        evaluation it removed (1.46 → 1.75 s) — and
-        ``IF(rand(seed) < 2.0, ...)`` is folded away entirely by
-        Spark 4's rand-comparison simplification (the duplication
-        came straight back). The partition-id compare survives the
-        optimizer, costs one int compare per row, and keeps plan
-        dumps byte-stable (no seed)."""
-        return f"IF(spark_partition_id() >= 0, {sql}, NULL)"
+        nondeterministic no-op (see plans.barriers.single_eval);
+        SQL-text backends (the DuckDB oracle) emit the plain
+        expression — the barrier is a physical-plan concern, not a
+        semantic one."""
+        return single_eval(sql)
 
     def _metadata_count_aggregate(self, step: FuncCall) -> bool:
         """The 100 TB ``SELECT count(*)`` that doesn't scan 100 TB:

@@ -225,9 +225,8 @@ def unigram_vocab(
     )
     # ONE job for both results (round 12): the top-V TakeOrdered
     # scans every counts row anyway, so the scalar total rides the
-    # same pass as an observed metric — replacing the previous
-    # persist + two actions (a second full pass over the cached
-    # counts, plus storage-memory residency until unpersist).
+    # same pass as an observed metric — no second pass over the
+    # counts and nothing held in storage memory.
     obs = Observation()
     top = (
         counts.observe(obs, F.sum("c").alias("total"))

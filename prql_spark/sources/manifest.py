@@ -85,6 +85,8 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 
+from prql_spark.plans.barriers import materialize
+
 _MANIFEST_DIR = "_manifests"
 _DATA_DIR = "data"
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
@@ -1969,10 +1971,10 @@ def merge_snapshot(
     # stage 1: prune candidates by manifest stats vs source key range.
     # The bounds agg, the key-count (broadcast gate) and the two probe
     # joins all consume the same distinct key set, so it is computed
-    # ONCE here: one job returns min/max/count over the persisted
+    # ONCE here: one job returns min/max/count over the materialized
     # keys (min/max over distinct keys == min/max over the source —
     # one fewer full source scan than a separate source-side agg).
-    keys = source.select(*on).dropDuplicates().persist()
+    keys = materialize(source.select(*on).dropDuplicates())
     krow = keys.agg(
         F.count(F.lit(1)).alias("__n"),
         *[F.min(c).alias(f"mn_{c}") for c in on],
@@ -2047,13 +2049,10 @@ def merge_snapshot(
             )
     else:
         new_data = source
-    try:
-        commit_id, staged = _stage_commit(
-            new_data, base, fs, jvm, partition_by, col_types,
-            stats_cols=_table_stats_cols(m, partition_by),
-        )
-    finally:
-        keys.unpersist()
+    commit_id, staged = _stage_commit(
+        new_data, base, fs, jvm, partition_by, col_types,
+        stats_cols=_table_stats_cols(m, partition_by),
+    )
     keep = {f["path"] for f in m["files"]} - touched
     return _commit_replacing(
         spark, path, m, keep, staged, "merge", commit_id=commit_id,

@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from prql_spark.plans.barriers import materialize
+
 
 def _dataset_exists(spark: SparkSession, path: str) -> bool:
     """True when ``path`` holds a non-empty dataset (ignoring _/.
@@ -132,7 +134,7 @@ def upsert_parquet(
     merged = kept.unionByName(updates.select(existing.columns))
     # break lineage from `path` before overwriting it; bounded by the
     # touched partitions thanks to the pruned scan above
-    merged = merged.localCheckpoint(eager=True)
+    merged = materialize(merged, eager=True)
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     try:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

@@ -357,7 +357,7 @@ def test_operator_construction_is_lazy(spark):
     read before/after each constructor; any increment is a job."""
     from pyspark.sql import functions as F
 
-    from prql_spark.operators import dedup, similarity, splits, text
+    from prql_spark.operators import dedup, similarity, splits, text, textnorm
     from prql_spark.operators.profile import rollup_stats
 
     docs = spark.createDataFrame(
@@ -396,6 +396,7 @@ def test_operator_construction_is_lazy(spark):
         "chunk_documents": lambda: text.chunk_documents(docs),
         "script_profile": lambda: text.script_profile(docs),
         "html_to_text": lambda: text.html_to_text(docs),
+        "normalize_text": lambda: textnorm.normalize_text(docs),
         "collocations": lambda: text.collocations(docs),
         "dedup_exact": lambda: dedup.dedup_exact(docs),
         "dedup_minhash_lsh": lambda: dedup.dedup_minhash_lsh(docs),
@@ -525,6 +526,10 @@ def test_window_removal_plan_shape(catalog):
         # the corpus text is scanned for the clean branch and the
         # dirty word stream only — never once per covered consumer
         assert plan.count("Scan parquet") <= 2, fn
+        # the reassembly runs once per dirty doc: without its
+        # single_eval wrapper the where-filter on __t substitutes the
+        # whole reassembly into a pushed Filter (a second array_except)
+        assert plan.count("array_except") == 1, fn
 
 
 def test_window_mark_phase_plan_shape(catalog):
@@ -602,3 +607,35 @@ def test_single_ref_cte_stays_inline(catalog):
     )
     plan = plan_of(compile_prql(narrow, catalog))
     assert "ExistingRDD" not in plan
+
+
+def test_materialize_seam(spark):
+    """plans.barriers.materialize, the one materialization policy: a
+    lazy call starts no job and yields an RDD scan whose blocks, once
+    an action stores them, sit on disk only; eager=True stores them
+    with exactly one job."""
+    from prql_spark.plans.barriers import materialize
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def jobs():
+        return sc.dagScheduler().nextJobId()
+
+    def narrow():
+        return spark.range(40).selectExpr("id * 2 AS v")
+
+    before = jobs()
+    lazy = materialize(narrow())
+    assert jobs() == before
+    assert "Scan ExistingRDD" in plan_of(lazy)
+    assert lazy.count() == 40
+    rdd = lazy._jdf.queryExecution().analyzed().rdd()
+    disk_only = spark._jvm.org.apache.spark.storage.StorageLevel.DISK_ONLY()
+    assert rdd.getStorageLevel().equals(disk_only)
+    info = [i for i in sc.getRDDStorageInfo() if i.id() == rdd.id()]
+    assert info and info[0].memSize() == 0 and info[0].diskSize() > 0
+
+    before = jobs()
+    eager = materialize(narrow(), eager=True)
+    assert jobs() - before == 1
+    assert eager.count() == 40
